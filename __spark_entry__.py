@@ -528,10 +528,9 @@ def q_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram (already on the driver from the shared reduction) becomes
     the baseline snapshot for operators/drift.drift_report_partitioned
     over the >1997 half keyed by o_orderpriority — the checkpointed-run
-    drift operator (baseline grid as struct literals, one
-    groupBy((partition, bin)) shuffle, window cumsum over ≤ n_bins+2 rows
-    per partition, no driver collect) as long-form scope='<priority>'
-    rows next to the scope='dataset' row."""
+    drift operator (one groupBy(partition) histogram aggregate, folded
+    with the baseline grid as literal arrays, no driver collect) as
+    long-form scope='<priority>' rows next to the scope='dataset' row."""
     from ndap_data_validator_spark.operators.drift import (
         categorical_drift,
         ks_exact_from_counts,

@@ -123,10 +123,17 @@ def _bucket_pairs(
     bucket would otherwise make one O(n²) join cell) produce STAR pairs
     (anchor = min id, paired with every other member) — O(n) per bucket,
     preserving connectivity for near-dup clustering. Bucket sizes come from
-    one aggregate on the same band key the join shuffles on."""
+    one aggregate on the same band key the join shuffles on.
+
+    A row with a NULL bucket key belongs to no bucket and pairs with
+    nothing — the semantics of the equi-join on ``bucket_cols`` (NULL never
+    equals NULL). The window below would otherwise group all NULL-key rows
+    into one partition and emit anchor-star pairs among them."""
     from pyspark.sql import Window
 
     a_id, b_id = id_col_out
+    for c in bucket_cols:
+        banded = banded.where(F.col(c).isNotNull())
     # bucket size + anchor as WINDOW aggregates over the same bucket key
     # the self-join shuffles on (r06): the former groupBy+join pair cost
     # two extra exchanges; the window establishes the hash partitioning

@@ -16,6 +16,11 @@ expressions evaluated in ONE ``groupBy(partition).agg(...)`` — map-side
 partial aggregation, one metadata-sized exchange, report assembly as
 expressions over the aggregate row (array-of-structs + explode, stays
 distributed). No per-row Python, no second pass, no driver collect.
+The two halves are separate: :func:`metric_aggs` (rule → aggregate
+expression) and :func:`rule_results` / :func:`failing_rules` (aggregate
+row → report rows / per-partition verdict), so a checkpointed run
+carries the rules inside the validator's own aggregate
+(``ValidationEngine.validate(extra_aggs=...)``) and never rescans.
 
 Metric vocabulary (``MetricRule.metric``):
 
@@ -59,8 +64,11 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "MetricRule",
+    "metric_aggs",
     "metric_expectations",
+    "rule_results",
     "expectations_summary",
+    "failing_rules",
     "suite_to_json",
     "suite_from_json",
 ]
@@ -220,37 +228,37 @@ def _value_expr(
     raise AssertionError(m)  # unreachable: __post_init__ validated
 
 
-def metric_expectations(
-    df: DataFrame,
+def metric_aggs(
     rules: list[MetricRule],
-    partition_by: str | Column | None = None,
     approx_distinct: bool = True,
     quantile_accuracy: int = 10_000,
     now: str | None = None,
-) -> DataFrame:
-    """Evaluate every rule in ONE shared aggregate. Returns the long-form
-    report ``(partition_id, rule, metric, column, value, min_bound,
-    max_bound, passed, severity)`` — one row per (partition, rule), value
-    rounded nowhere (callers round for display)."""
+) -> dict[str, Column]:
+    """Rule → aggregate expression: one named aggregate per rule, for any
+    ``groupBy(partition).agg`` to carry — :func:`metric_expectations`
+    runs them alone, a checkpointed run folds them into the validator's
+    shared aggregate. :func:`rule_results` reads the row back by these
+    names."""
     if not rules:
         raise ValueError("no rules given")
     names = [r.name for r in rules]
     if len(set(names)) != len(names):
         raise ValueError(f"duplicate rule names: {names}")
-
-    part_expr = (
-        F.lit(GLOBAL_PARTITION)
-        if partition_by is None
-        else (F.col(partition_by) if isinstance(partition_by, str) else partition_by)
-    ).cast("string").alias("partition_id")
-
-    aggs = [
-        _value_expr(r, approx_distinct, quantile_accuracy, now).alias(
-            f"r{i}__v"
-        )
+    return {
+        _alias(i): _value_expr(r, approx_distinct, quantile_accuracy, now)
         for i, r in enumerate(rules)
-    ]
-    agg = df.groupBy(part_expr).agg(*aggs)
+    }
+
+
+def _alias(i: int) -> str:
+    return f"__exp{i}"
+
+
+def rule_results(rules: list[MetricRule]) -> Column:
+    """Aggregate row → one verdict struct per rule, ``array<struct<rule,
+    metric, column, value, min_bound, max_bound, passed, severity>>``
+    over the :func:`metric_aggs` columns; ``F.inline`` of it is the
+    long-form report."""
 
     def _passed(r: MetricRule, v: Column) -> Column:
         # NaN must FAIL regardless of bound direction: Spark orders NaN
@@ -264,32 +272,54 @@ def metric_expectations(
             ok = ok & (v <= F.lit(float(r.max_bound)))
         return ok
 
-    structs = F.array(
+    return F.array(
         *[
             F.struct(
                 F.lit(r.name).alias("rule"),
                 F.lit(r.metric).alias("metric"),
                 F.lit(r.column).cast("string").alias("column"),
-                F.col(f"r{i}__v").alias("value"),
+                F.col(_alias(i)).alias("value"),
                 F.lit(r.min_bound).cast("double").alias("min_bound"),
                 F.lit(r.max_bound).cast("double").alias("max_bound"),
-                _passed(r, F.col(f"r{i}__v")).alias("passed"),
+                _passed(r, F.col(_alias(i))).alias("passed"),
                 F.lit(r.severity).alias("severity"),
             )
             for i, r in enumerate(rules)
         ]
     )
-    return agg.select("partition_id", F.explode(structs).alias("e")).select(
-        "partition_id",
-        "e.rule",
-        "e.metric",
-        "e.column",
-        "e.value",
-        "e.min_bound",
-        "e.max_bound",
-        "e.passed",
-        "e.severity",
+
+
+def failing_rules(results: Column, severity: str = "error") -> Column:
+    """A :func:`rule_results` column → the sorted names of the rules of
+    ``severity`` that failed: :func:`expectations_summary`'s
+    ``failed_rules`` / ``warned_rules`` as a projection, with no
+    regrouping of the report."""
+    failing = F.filter(
+        results, lambda e: ~e["passed"] & (e["severity"] == severity)
     )
+    return F.array_sort(F.transform(failing, lambda e: e["rule"]))
+
+
+def metric_expectations(
+    df: DataFrame,
+    rules: list[MetricRule],
+    partition_by: str | Column | None = None,
+    approx_distinct: bool = True,
+    quantile_accuracy: int = 10_000,
+    now: str | None = None,
+) -> DataFrame:
+    """Evaluate every rule in ONE shared aggregate. Returns the long-form
+    report ``(partition_id, rule, metric, column, value, min_bound,
+    max_bound, passed, severity)`` — one row per (partition, rule), value
+    rounded nowhere (callers round for display)."""
+    aggs = metric_aggs(rules, approx_distinct, quantile_accuracy, now)
+    part_expr = (
+        F.lit(GLOBAL_PARTITION)
+        if partition_by is None
+        else (F.col(partition_by) if isinstance(partition_by, str) else partition_by)
+    ).cast("string").alias("partition_id")
+    agg = df.groupBy(part_expr).agg(*[e.alias(n) for n, e in aggs.items()])
+    return agg.select("partition_id", F.inline(rule_results(rules)))
 
 
 def expectations_summary(report: DataFrame) -> DataFrame:

@@ -88,6 +88,9 @@ class ValidationResult:
     # plan in executor storage memory. Actions taken after release()
     # simply recompute the (tiny) aggregate.
     cached_aggregate: DataFrame | None = None
+    # (partition_id, <extra_aggs names…>) read off that same aggregate row
+    # when validate() was given extra_aggs; None otherwise
+    aggregates: DataFrame | None = None
 
     def release(self) -> None:
         """Unpersist the shared aggregate cache (no-op if uncached)."""
@@ -340,6 +343,7 @@ class ValidationEngine:
         order_by: list[str] | None = None,
         cache_aggregates: bool = True,
         max_violations_per_rule: int | None = None,
+        extra_aggs: dict[str, Column] | None = None,
     ) -> ValidationResult:
         """Run the full validation query.
 
@@ -354,7 +358,17 @@ class ValidationEngine:
         (or a bad data drop) otherwise floods the report sink with
         billions of example rows; the full violation COUNTS are unaffected
         — they come from the aggregate, not from these rows.
+        ``extra_aggs`` — further named aggregate expressions (e.g.
+        ``operators.expectations.metric_aggs``,
+        ``operators.drift.drift_hist_aggs``) evaluated in the SAME
+        ``groupBy(partition).agg``; they ride the persisted aggregate and
+        come back as ``ValidationResult.aggregates``, so other rule
+        families fold over it without scanning the source again.
         """
+        extra = dict(extra_aggs or {})
+        clash = {"partition_id", "rows", "__cols"} & set(extra)
+        if clash:
+            raise ValueError(f"extra_aggs names {sorted(clash)} are reserved")
         slots = self._slots(df, assignments)
         missing_roles = self._missing_roles(assignments)
 
@@ -364,13 +378,19 @@ class ValidationEngine:
             else (F.col(partition_by) if isinstance(partition_by, str) else partition_by)
         ).cast("string").alias("partition_id")
 
-        agg = df.groupBy(part_expr).agg(*self._agg_exprs(slots))
+        # extras are aliased x__<name> inside the aggregate: the slot
+        # aliases (c<i>__…, __rows) can never collide with them
+        agg = df.groupBy(part_expr).agg(
+            *self._agg_exprs(slots),
+            *[e.alias(f"x__{n}") for n, e in extra.items()],
+        )
 
         col_structs = F.array(*[self._column_struct(s) for s in slots])
         wide = agg.select(
             F.col("partition_id"),
             F.col("__rows").alias("rows"),
             col_structs.alias("__cols"),
+            *[F.col(f"x__{n}").alias(n) for n in extra],
         )
         if cache_aggregates:
             # The aggregate is one row per partition — tiny. Persisting it
@@ -421,6 +441,7 @@ class ValidationEngine:
             coerced=coerced,
             missing_roles=missing_roles,
             cached_aggregate=wide if cache_aggregates else None,
+            aggregates=wide.select("partition_id", *extra) if extra else None,
         )
 
     def _row_checks(self, s: _Slot) -> list[tuple[Column, str]]:

@@ -28,10 +28,11 @@ from ndap_data_validator_spark.session import literal_frame
 
 NULL_PARTITION = "<null>"
 
-CHECKPOINT_SCHEMA = (
+_RECORD_SCHEMA = (
     "run_id string, partition_id string, rule_digest string, "
-    "status string, metrics_json string, committed_at timestamp"
+    "status string, metrics_json string"
 )
+CHECKPOINT_SCHEMA = _RECORD_SCHEMA + ", committed_at timestamp"
 
 
 class CheckpointStore:
@@ -115,27 +116,7 @@ class CheckpointStore:
     def mark_done(
         self, run_id: str, partition_id: str, rule_digest: str, metrics: dict
     ) -> None:
-        row = [
-            (
-                run_id,
-                partition_id,
-                rule_digest,
-                "done",
-                json.dumps(metrics, sort_keys=True),
-            )
-        ]
-        (
-            literal_frame(
-                self.spark,
-                row,
-                "run_id string, partition_id string, rule_digest string, "
-                "status string, metrics_json string",
-            )
-            .withColumn("committed_at", F.current_timestamp())
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(self.path)
-        )
+        self.mark_done_bulk(run_id, rule_digest, {partition_id: metrics})
 
     def mark_done_bulk(
         self, run_id: str, rule_digest: str, partition_metrics: dict[str, dict]
@@ -144,22 +125,15 @@ class CheckpointStore:
         partition — at 10^4 partitions per run this matters)."""
         if not partition_metrics:
             return
-        rows = [
-            (run_id, pid, rule_digest, "done", json.dumps(m, sort_keys=True))
-            for pid, m in partition_metrics.items()
-        ]
-        (
-            literal_frame(
-                self.spark,
-                rows,
-                "run_id string, partition_id string, rule_digest string, "
-                "status string, metrics_json string",
-            )
-            .withColumn("committed_at", F.current_timestamp())
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(self.path)
+        self._append_rows(
+            [
+                (run_id, pid, rule_digest, "done", json.dumps(m, sort_keys=True))
+                for pid, m in partition_metrics.items()
+            ]
         )
+
+    def _append_rows(self, rows: list[tuple]) -> None:
+        self.mark_done_frame(literal_frame(self.spark, rows, _RECORD_SCHEMA))
 
     def mark_done_frame(self, frame: DataFrame) -> None:
         """Commit completion records from a DataFrame — the DISTRIBUTED path:
@@ -167,7 +141,8 @@ class CheckpointStore:
         aggregates), so nothing data-sized is ever collected to the driver
         (VERDICT r01 'What's missing #5'). ``frame`` must carry (run_id,
         partition_id, rule_digest, status, metrics_json); rows are
-        partition-count-sized, hence the small-file-friendly coalesce."""
+        partition-count-sized, hence the small-file-friendly coalesce.
+        Every record the store holds is committed through here."""
         (
             frame.select(
                 "run_id", "partition_id", "rule_digest", "status", "metrics_json"
@@ -187,19 +162,11 @@ class CheckpointStore:
         main.py:180-187): the max of the watermark column seen by the last
         completed run, keyed by ``scope`` (the watermark column name — the
         store path itself is per-pipeline)."""
-        row = [(f"WM::{scope}", "<watermark>", "", self.WATERMARK_STATUS,
-                json.dumps({"high_watermark": value}))]
-        (
-            literal_frame(
-                self.spark,
-                row,
-                "run_id string, partition_id string, rule_digest string, "
-                "status string, metrics_json string",
-            )
-            .withColumn("committed_at", F.current_timestamp())
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(self.path)
+        self._append_rows(
+            [
+                (f"WM::{scope}", "<watermark>", "", self.WATERMARK_STATUS,
+                 json.dumps({"high_watermark": value}))
+            ]
         )
 
     def last_watermark(self, scope: str) -> str | None:

@@ -15,12 +15,23 @@ partition pruning, so skipped partitions are never even read.
 
 from __future__ import annotations
 
+import functools
 import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ndap_data_validator_spark.operators.drift import (
+    drift_fold,
+    drift_hist_aggs,
+    drifted_columns,
+)
+from ndap_data_validator_spark.operators.expectations import (
+    failing_rules,
+    metric_aggs,
+    rule_results,
+)
 from ndap_data_validator_spark.operators.validate import ValidationEngine, ValidationResult
 from ndap_data_validator_spark.plans.checkpoint import NULL_PARTITION, CheckpointStore
 from ndap_data_validator_spark.rules.model import (
@@ -55,6 +66,26 @@ class RunOutcome:
     completeness: DataFrame | None = None
 
 
+_JOB_DESCRIPTION = "spark.job.description"
+
+
+def _restores_job_description(fn):
+    """``fn(spark, ...)`` labels its jobs through ``spark.job.description``
+    (the event log's and UI's job label); put the caller's label back
+    afterwards. The job GROUP is never touched, so a caller can still
+    group and cancel a whole run."""
+
+    @functools.wraps(fn)
+    def wrapper(spark: SparkSession, *args, **kwargs):
+        before = spark.sparkContext.getLocalProperty(_JOB_DESCRIPTION)
+        try:
+            return fn(spark, *args, **kwargs)
+        finally:
+            spark.sparkContext.setLocalProperty(_JOB_DESCRIPTION, before)
+
+    return wrapper
+
+
 def partition_key(partition_by: str | Column) -> Column:
     col = F.col(partition_by) if isinstance(partition_by, str) else partition_by
     return F.coalesce(col.cast("string"), F.lit(NULL_PARTITION))
@@ -63,6 +94,7 @@ def partition_key(partition_by: str | Column) -> Column:
 LOAD_MODES = ("new", "full_reload", "delta", "structure_change")
 
 
+@_restores_job_description
 def run_validation(
     spark: SparkSession,
     df: DataFrame,
@@ -151,8 +183,9 @@ def run_validation(
 
     ``metric_rules`` (optional list of
     ``operators.expectations.MetricRule``) evaluates dataset-level metric
-    expectations per partition (ONE extra shared aggregate over the same
-    resume slice) and folds them into the run contract end to end: the
+    expectations per partition — compiled into the validator's own shared
+    aggregate over the same resume slice, so they cost no extra scan — and
+    folds them into the run contract end to end: the
     report lands at ``{report_path}/metric_expectations``; a partition
     whose error-severity expectation fails is withheld from the publish
     gate and freezes the delta watermark (warn-severity rules report
@@ -176,10 +209,12 @@ def run_validation(
 
     ``drift_rule`` (optional ``operators.drift.DriftRule``) runs the
     KS/PSI distribution-drift check against the rule's baseline snapshot
-    PER PARTITION over the same resume slice — one groupBy((partition,
-    bin)) per baseline column, the baseline entering as broadcast-grade
-    literals (operators/drift.drift_report_partitioned; no driver
-    collect). The per-(partition, column) report lands at
+    PER PARTITION over the same resume slice — each baseline column's
+    histogram is one more aggregate in the validator's shared
+    ``groupBy(partition).agg``, folded into KS/PSI/JS/W1 as a projection
+    over the cached row with the baseline entering as literals
+    (operators/drift.drift_fold; no extra scan, no driver collect). The
+    per-(partition, column) report lands at
     ``{report_path}/drift_report``; with ``severity="error"`` a drifted
     partition is withheld from publish and freezes the delta watermark
     (``"warn"`` reports only); the drifted column names ride
@@ -270,12 +305,19 @@ def run_validation(
     )
     store = CheckpointStore(spark, checkpoint_path)
 
+    def step(family: str, name: str) -> None:
+        # every job launched from here on reads <run_id>/<family>/<step>
+        spark.sparkContext.setLocalProperty(
+            _JOB_DESCRIPTION, f"{run_id}/{family}/{name}"
+        )
+
     key = partition_key(partition_by)
 
     delta_batch: str | None = None
     if load_mode == "delta":
         if watermark_col is None:
             raise ValueError("delta load_mode requires watermark_col")
+        step("checkpoint", "watermark_read")
         last_wm = store.last_watermark(watermark_col)
         if last_wm is not None:
             wm_type = dict(df.dtypes)[watermark_col]
@@ -293,9 +335,21 @@ def run_validation(
     if load_mode in ("full_reload", "structure_change"):
         done: set[str] = set()
     else:
+        step("checkpoint", "resume_filter")
         done = store.completed_partitions(run_id, digest)
 
     remaining = df.where(~key.isin(sorted(done))) if done else df
+
+    # Metric expectations and drift histograms are more aggregates over the
+    # SAME resume slice: they ride the validator's one shared
+    # groupBy(partition).agg and its persisted row. Their reports and
+    # per-partition verdicts are projections over that row, so neither
+    # family reads the source again.
+    extra_aggs = {}
+    if metric_rules:
+        extra_aggs.update(metric_aggs(metric_rules, now=metric_now))
+    if drift_rule is not None:
+        extra_aggs.update(drift_hist_aggs(drift_rule.baseline))
 
     result = engine.validate(
         remaining,
@@ -303,34 +357,35 @@ def run_validation(
         partition_by=key,
         order_by=order_by,
         max_violations_per_rule=max_violations_per_rule,
+        extra_aggs=extra_aggs,
     )
 
-    # Dataset-level expectations over the SAME resume slice: one extra
-    # shared aggregate (operators/expectations.py). The tiny per-partition
-    # summary is persisted because it feeds up to three actions below
-    # (metrics_json, publish gate, watermark fold) — without the persist
-    # each action would rescan the source for the expectations agg.
-    exp_report = None
-    exp_summary = None
+    # The families' per-partition verdicts: the failed rule / drifted
+    # column names that ride metrics_json, plus ``family_passed``, which
+    # folds the error-severity verdicts into the recorded verdict, the
+    # publish gate and the delta watermark (``gate`` is None when no
+    # family gates).
+    exp_report = drift_rep = verdicts = gate = None
+    verdict_cols: dict[str, Column] = {}
     if metric_rules:
-        from ndap_data_validator_spark.operators.expectations import (
-            expectations_summary,
-            metric_expectations,
+        results = rule_results(metric_rules)
+        exp_report = result.aggregates.select("partition_id", F.inline(results))
+        verdict_cols["expectation_failed_rules"] = failing_rules(results, "error")
+        verdict_cols["expectation_warned_rules"] = failing_rules(results, "warn")
+        gate = F.size("expectation_failed_rules") == 0
+    if drift_rule is not None:
+        fold = drift_fold(
+            drift_rule.baseline, drift_rule.ks_threshold, drift_rule.psi_threshold
         )
-
-        exp_report = metric_expectations(
-            remaining, metric_rules, partition_by=key, now=metric_now
-        )
-        exp_summary = (
-            expectations_summary(exp_report)
-            .select(
-                "partition_id",
-                F.col("failed_rules").alias("exp_failed_rules"),
-                F.col("warned_rules").alias("exp_warned_rules"),
-                F.col("passed").alias("exp_passed"),
-            )
-            .persist()
-        )
+        drift_rep = result.aggregates.select("partition_id", F.inline(fold))
+        verdict_cols["drifted_columns"] = drifted_columns(fold)
+        if drift_rule.severity == "error":
+            no_drift = F.size("drifted_columns") == 0
+            gate = no_drift if gate is None else gate & no_drift
+    if verdict_cols:
+        verdicts = result.aggregates.select(
+            "partition_id", *[c.alias(n) for n, c in verdict_cols.items()]
+        ).withColumn("family_passed", F.lit(True) if gate is None else gate)
 
     # Expected-partition completeness census (operators/completeness.py)
     # over the FULL batch slice, NOT the resume remainder — whether a
@@ -353,35 +408,6 @@ def run_validation(
                 min_rows=expected_min_rows,
             )
             .withColumnRenamed("key", "partition_id")
-            .persist()
-        )
-
-    # Per-partition drift vs the rule's baseline snapshot, over the SAME
-    # resume slice. The tiny (partitions × columns) summary is persisted
-    # because, like exp_summary, it can feed three actions (metrics_json,
-    # publish gate, watermark fold).
-    drift_rep = None
-    drift_summary = None
-    if drift_rule is not None:
-        from ndap_data_validator_spark.operators.drift import (
-            drift_report_partitioned,
-        )
-
-        drift_rep = drift_report_partitioned(
-            remaining,
-            key,
-            drift_rule.baseline,
-            ks_threshold=drift_rule.ks_threshold,
-            psi_threshold=drift_rule.psi_threshold,
-        )
-        drift_summary = (
-            drift_rep.groupBy("partition_id")
-            .agg(
-                F.sort_array(
-                    F.collect_list(F.when(F.col("drifted"), F.col("column")))
-                ).alias("drifted_columns")
-            )
-            .withColumn("drift_passed", F.size("drifted_columns") == 0)
             .persist()
         )
 
@@ -422,7 +448,9 @@ def run_validation(
                 )
             return  # one partition dir is representative; all share a depth
 
-    def _write_partitioned(frame: DataFrame, path: str) -> None:
+    def _write_partitioned(
+        frame: DataFrame, path: str, family: str, name: str = "report_write"
+    ) -> None:
         # Dynamic partition overwrite → re-validating a partition replaces
         # its rows; a re-run after crash is idempotent. The mode is pinned on
         # the WRITER (not session config) so the contract holds even with a
@@ -431,6 +459,7 @@ def run_validation(
         _assert_layout_depth(path)
         if delta_batch is not None:
             frame = frame.withColumn("delta_batch", F.lit(delta_batch))
+        step(family, name)
         (
             frame.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -439,8 +468,15 @@ def run_validation(
         )
 
     if report_path is not None:
-        _write_partitioned(result.per_column_report, f"{report_path}/per_column")
-        _write_partitioned(result.violations, f"{report_path}/violations")
+        _write_partitioned(
+            result.per_column_report, f"{report_path}/per_column", "columns"
+        )
+        _write_partitioned(
+            result.violations,
+            f"{report_path}/violations",
+            "columns",
+            "violations_write",
+        )
         if sequence_rule is not None:
             # conversation-order rules (rules.model.SequenceRule): one
             # window shuffle on the conversation key over the SAME resume
@@ -456,7 +492,9 @@ def run_validation(
                 sequence_rule,
                 carry_cols=("__part_id",),
             ).withColumnRenamed("__part_id", "partition_id")
-            _write_partitioned(seq_v, f"{report_path}/sequence_violations")
+            _write_partitioned(
+                seq_v, f"{report_path}/sequence_violations", "sequence"
+            )
         if check_rules:
             # row-level CHECK constraints (rules.model.CheckRule): pure
             # scan-level projection over the SAME resume slice — no
@@ -473,25 +511,32 @@ def run_validation(
                 key_cols=key_cols,
                 carry_cols=("__part_id",),
             ).withColumnRenamed("__part_id", "partition_id")
-            _write_partitioned(chk_v, f"{report_path}/check_violations")
+            _write_partitioned(
+                chk_v, f"{report_path}/check_violations", "checks"
+            )
         if exp_report is not None:
             # dataset-level expectation verdicts: one row per (partition,
             # rule) with value/bounds/passed, same overwrite contract
-            _write_partitioned(exp_report, f"{report_path}/metric_expectations")
+            _write_partitioned(
+                exp_report, f"{report_path}/metric_expectations", "expectations"
+            )
         if comp_report is not None:
             # expected-partition census: one row per expected-or-observed
             # key, same idempotent per-partition overwrite contract
-            _write_partitioned(comp_report, f"{report_path}/completeness")
+            _write_partitioned(
+                comp_report, f"{report_path}/completeness", "completeness"
+            )
         if drift_rep is not None:
             # per-(partition, column) KS/PSI/JS/W1 vs the baseline grid,
             # same overwrite contract
-            _write_partitioned(drift_rep, f"{report_path}/drift_report")
+            _write_partitioned(drift_rep, f"{report_path}/drift_report", "drift")
 
     # Checkpoint metrics are assembled DISTRIBUTED: per-column stats fold to
     # a map per partition, join the summary, and to_json builds the record —
     # no per-column collect() in the run path (the old driver fold was a
     # bottleneck at 10^5 partitions × wide schemas). The only collect is the
     # partition-id list for the outcome (one short string per partition).
+    step("columns", "summary_collect")
     processed = sorted(
         r["partition_id"] for r in result.summary.select("partition_id").collect()
     )
@@ -508,40 +553,22 @@ def run_validation(
         )
         summary_for_metrics = result.summary.join(per_col_map, "partition_id", "left")
         passed_expr = F.col("passed")
-        extra_fields = []
-        if exp_summary is not None:
-            # a partition's recorded verdict folds in its error-severity
-            # expectation failures; the rule names ride along for the
-            # cross-run anomaly history (plans/anomaly.py reads these paths)
+        extra_fields: list[Column] = []
+        if verdicts is not None:
+            # a partition's recorded verdict folds in the families'
+            # error-severity verdicts; the failed rule and drifted column
+            # names ride along for the cross-run anomaly history
+            # (plans/anomaly.py reads these paths)
             summary_for_metrics = summary_for_metrics.join(
-                exp_summary, "partition_id", "left"
+                verdicts, "partition_id", "left"
             )
             passed_expr = passed_expr & F.coalesce(
-                F.col("exp_passed"), F.lit(True)
+                F.col("family_passed"), F.lit(True)
             )
-            extra_fields += [
-                F.coalesce(
-                    F.col("exp_failed_rules"), F.array().cast("array<string>")
-                ).alias("expectation_failed_rules"),
-                F.coalesce(
-                    F.col("exp_warned_rules"), F.array().cast("array<string>")
-                ).alias("expectation_warned_rules"),
+            extra_fields = [
+                F.coalesce(F.col(n), F.array().cast("array<string>")).alias(n)
+                for n in verdict_cols
             ]
-        if drift_summary is not None:
-            # drifted column names ride along for the anomaly history; only
-            # error severity folds into the recorded verdict
-            summary_for_metrics = summary_for_metrics.join(
-                drift_summary, "partition_id", "left"
-            )
-            if drift_rule.severity == "error":
-                passed_expr = passed_expr & F.coalesce(
-                    F.col("drift_passed"), F.lit(True)
-                )
-            extra_fields.append(
-                F.coalesce(
-                    F.col("drifted_columns"), F.array().cast("array<string>")
-                ).alias("drifted_columns")
-            )
         json_fields = [
             F.col("rows"),
             F.col("failed_count"),
@@ -557,6 +584,7 @@ def run_validation(
             F.lit("done").alias("status"),
             F.to_json(F.struct(*json_fields)).alias("metrics_json"),
         )
+        step("checkpoint", "mark_done")
         store.mark_done_frame(metrics_frame)
 
     # Partitions failing an AGGREGATE-granular column verdict — today only
@@ -601,24 +629,13 @@ def run_validation(
             passed_parts = result.summary.where(F.col("passed")).select(
                 "partition_id"
             )
-        if exp_summary is not None:
-            # error-severity expectation failures withhold the partition
-            # from publish exactly like column-rule failures do
+        if gate is not None:
+            # error-severity expectation failures and drift withhold the
+            # partition from publish exactly like column-rule failures do
             passed_parts = passed_parts.join(
-                exp_summary.where(F.col("exp_passed")).select("partition_id"),
+                verdicts.where("family_passed").select("partition_id"),
                 "partition_id",
                 "left_semi",
-            )
-        if drift_summary is not None and drift_rule.severity == "error":
-            # anti-join against FAILURES (not semi against passes): a
-            # partition where every baseline column is null carries no
-            # drift rows at all and must still publish
-            passed_parts = passed_parts.join(
-                drift_summary.where(~F.col("drift_passed")).select(
-                    "partition_id"
-                ),
-                "partition_id",
-                "left_anti",
             )
         if row_policy == "quarantine" and publish_gated:
             # one scan-level projection computes every row's verdict; the
@@ -634,11 +651,15 @@ def run_validation(
                     "row_reasons", "row_passed"
                 ),
                 publish_path,
+                "publish",
+                "write",
             )
             _write_partitioned(
                 gated.where(~F.col("row_passed")).drop("row_passed"),
                 quarantine_path
                 or (publish_path.rstrip("/") + "_quarantine"),
+                "quarantine",
+                "write",
             )
         elif row_policy != "quarantine":
             _write_partitioned(
@@ -646,6 +667,8 @@ def run_validation(
                     passed_parts, "partition_id", "left_semi"
                 ),
                 publish_path,
+                "publish",
+                "write",
             )
 
     if load_mode == "delta" and watermark_col is not None:
@@ -683,50 +706,28 @@ def run_validation(
         wm_fold = df.agg(
             F.max(F.col(watermark_col)).cast("string").alias("wm")
         ).crossJoin(fail_fold)
-        if exp_summary is not None:
-            # expectation failures are DATA failures for watermark purposes:
-            # a retry re-picks the same rows (plus arrivals) and may pass
+        if gate is not None:
+            # so are error-severity expectation failures and drift: the
+            # batch stays re-pickable until a retry passes (or a
+            # re-baseline clears the drift)
             wm_fold = wm_fold.crossJoin(
-                exp_summary.agg(
+                verdicts.agg(
                     F.coalesce(
-                        F.sum((~F.col("exp_passed")).cast("int")), F.lit(0)
-                    ).alias("n_exp_failed")
+                        F.sum((~F.col("family_passed")).cast("int")), F.lit(0)
+                    ).alias("n_family_failed")
                 )
             )
-        drift_gates_wm = (
-            drift_summary is not None and drift_rule.severity == "error"
-        )
-        if drift_gates_wm:
-            # so is error-severity drift: the batch stays re-pickable until
-            # a later batch (or re-baseline) clears it
-            wm_fold = wm_fold.crossJoin(
-                drift_summary.agg(
-                    F.coalesce(
-                        F.sum((~F.col("drift_passed")).cast("int")), F.lit(0)
-                    ).alias("n_drift_failed")
-                )
-            )
+        step("checkpoint", "watermark_fold")
         fold = wm_fold.first()
-        n_exp_failed = fold["n_exp_failed"] if exp_summary is not None else 0
-        n_drift_failed = fold["n_drift_failed"] if drift_gates_wm else 0
-        if (
-            fold["n_failed"] == 0
-            and n_exp_failed == 0
-            and n_drift_failed == 0
-            and fold["wm"] is not None
-        ):
+        n_family_failed = fold["n_family_failed"] if gate is not None else 0
+        if fold["n_failed"] == 0 and n_family_failed == 0 and fold["wm"] is not None:
+            step("checkpoint", "watermark_write")
             store.record_watermark(watermark_col, fold["wm"])
 
-    # Both tiny persisted summaries have fed their last action by here —
-    # release the cached blocks so a long-lived driver looping
-    # run_validation once per batch doesn't accumulate dead per-run caches
-    # in executor storage memory.
-    if exp_summary is not None:
-        exp_summary.unpersist()
-    if drift_summary is not None:
-        drift_summary.unpersist()
-    # ... and the validator's shared per-partition aggregate, which the
-    # report writes / metrics collect / verdict fold above materialized.
+    # Release the validator's shared per-partition aggregate, which the
+    # report writes / metrics collect / verdict folds above materialized,
+    # so a long-lived driver looping run_validation once per batch doesn't
+    # accumulate dead per-run caches in executor storage memory.
     # RunOutcome.result stays usable — later actions recompute the tiny
     # aggregate instead of reading a stranded cache.
     result.release()
@@ -738,6 +739,7 @@ def run_validation(
         .where(F.col("rule_digest") == digest)
         .where(F.col("status") == "done")
     )
+    step("checkpoint", "run_log")
     fold = log.agg(
         F.count(F.lit(1)).alias("n"),
         F.min(
@@ -752,6 +754,7 @@ def run_validation(
         # nothing to withhold from publish, so the verdict is the only
         # lever. 'unexpected' keys are reported but don't fail here: their
         # rows went through validation like any other partition's.
+        step("completeness", "verdict")
         incomplete = (
             comp_report.where(
                 F.col("status").isin("missing", "undersized")
@@ -765,6 +768,7 @@ def run_validation(
     # ~2 small files); single-writer at end-of-run, so the non-atomic swap
     # window documented on compact() cannot race a concurrent committer
     if compact_max_files is not None:
+        step("checkpoint", "compact")
         store.maybe_compact(compact_max_files)
 
     return RunOutcome(

@@ -123,6 +123,25 @@ def test_lsh_bucket_cap_bounds_identical_doc_flood(spark):
     assert pairs.select("id_b").distinct().count() == 999
 
 
+def test_null_bucket_keys_emit_no_pairs(spark):
+    """NULL bucket keys pair with nothing, like the equi-join the bucket
+    windows replaced: 300 NULL-key rows (over the cap, so they would
+    otherwise become anchor-star pairs) and 3 NULL-key rows (under it)
+    contribute no pairs; the one real bucket still pairs fully."""
+    banded = spark.createDataFrame(
+        [(i, 0, None) for i in range(300)]
+        + [(1000 + i, 1, None) for i in range(3)]
+        + [(2000 + i, 0, 7) for i in range(3)],
+        "doc_id long, band_idx int, band_hash long",
+    )
+    pairs = D._bucket_pairs(
+        banded, "doc_id", ["band_idx", "band_hash"], ("id_a", "id_b"), 100
+    )
+    assert sorted((r["id_a"], r["id_b"]) for r in pairs.collect()) == [
+        (2000, 2001), (2000, 2002), (2001, 2002),
+    ]
+
+
 def test_simhash_bucket_cap(spark):
     flood = spark.range(600).select(
         F.col("id").alias("doc_id"),
